@@ -20,15 +20,18 @@ object Extended15 {
     // bodies; at corpus scale the span column would be a 128-bit digest
     // (same plan, smaller shuffle — the t4 fingerprint path).
     "dedup_paragraph" -> ((s, d) => {
+      // the words are bound to a column once: split inside the span lambda
+      // would re-split the whole document per span
       val spans = t(s, d, "documents")
+        .select(col("doc_id"), split(col("text"), " ").as("_w"))
         // guard: sequence(0, -1) would generate a DESCENDING ramp for docs
         // shorter than one span (DuckDB's range is empty there) — keep only
         // docs with at least one full span on both sides
-        .filter(size(split(col("text"), " ")) >= 10)
+        .filter(size(col("_w")) >= 10)
         .select(col("doc_id"), expr("""
           explode(transform(
-            sequence(0, CAST(size(split(text, ' ')) / 10 AS INT) - 1),
-            i -> concat_ws(' ', slice(split(text, ' '), i * 10 + 1, 10))))""").as("span"))
+            sequence(0, CAST(size(_w) / 10 AS INT) - 1),
+            i -> concat_ws(' ', slice(_w, i * 10 + 1, 10))))""").as("span"))
         .filter(length(col("span")) > 0)
         .distinct()
       val dup = spans.groupBy("span")

@@ -100,20 +100,27 @@ object Extended2 {
     }),
 
     // ---- embedding int8 quantization + reconstruction error ----
+    // transform/zip_with/aggregate are interpreted per element and a lambda
+    // body is a CSE boundary, so every per-row value the lambdas capture
+    // (the cast vector, its min/max, the scale) is bound to a column first —
+    // inlined, each was recomputed per element, O(d²) per row. The private
+    // names keep the output aliases (vmin, vmax) from shadowing them.
     "v2_vector_quantize" -> ((s, d) => {
-      val vd = col("embedding").cast("array<double>")
-      val vmin = array_min(vd)
-      val vmax = array_max(vd)
-      val scale = (vmax - vmin) / 255.0
+      val (vd, vmin, vmax, scale) = (col("_vd"), col("_lo"), col("_hi"), col("_sc"))
       val q = transform(vd, x =>
-        when(lit(scale) === 0, lit(0L))
+        when(scale === 0, lit(0L))
           .otherwise(round((x - vmin) / scale, 0).cast("long")))
       val dq = transform(q, qi => vmin + qi * scale)
       // ascending fold on both engines so the float sum is bit-identical
       val sqErr = aggregate(
         zip_with(vd, dq, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, e) => acc + e)
-      t(s, d, "embeddings").select(col("vec_id"),
+      t(s, d, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("_vd"))
+        .select(col("vec_id"), vd,
+          array_min(vd).as("_lo"), array_max(vd).as("_hi"))
+        .select(col("vec_id"), vd, vmin, vmax, ((vmax - vmin) / 255.0).as("_sc"))
+        .select(col("vec_id"),
           round(vmin, 4).as("vmin"), round(vmax, 4).as("vmax"),
           aggregate(q, lit(0L), (acc, e) => acc + e).as("q_sum"),
           round(sqrt(sqErr / 64.0), 6).as("rmse"))

@@ -55,8 +55,11 @@ object Extended9 {
         .select(col("doc_id"),
           size(col("toks")).cast("long").as("n_tok"),
           size(array_distinct(col("toks"))).cast("long").as("n_uniq"),
-          expr("if(size(toks) > 1, transform(sequence(1, size(toks) - 1), " +
-            "i -> concat(toks[i-1], ' ', toks[i])), array())").as("bigrams"))
+          // adjacent pairs as two offset slices: the lambda captures no
+          // per-row value, so the filter Spark infers for explode(bigrams)
+          // cannot inline the tokenizer into a per-element body
+          expr("zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks)), " +
+            "(a, b) -> concat(a, ' ', b))").as("bigrams"))
       val bg = base
         .select(col("doc_id"), explode(col("bigrams")).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
